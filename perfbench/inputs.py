@@ -1,5 +1,5 @@
 """Seeded inputs: the corpus split, the serve query stream and the ingest
-batches. Everything here is pure Python and a function of the seed alone,
+batch. Everything here is pure Python and a function of the seed alone,
 so two generations with one seed are identical (selftest.py checks it).
 
 A query is a :class:`Query`: the string the engine receives plus the
@@ -23,9 +23,9 @@ INGEST_CLASSES = ("word", "regex_broad", "mixed")
 # Broad regex atoms: ``int (a|b)`` on hot identifier heads. Its candidate
 # bound is 25-45% of the corpus for every seed, so plan_regex routes it to
 # the index where a scan would be cheaper; ``return (a|b)`` would sit on
-# the 50% scan cutoff and change route with the seed. The i-th query of a
-# class always has the same shape, so seeds change the corpus and the
-# picks, not the mix of query costs.
+# the 50% scan cutoff and change route with the seed. A class's query
+# always has the same shape, so seeds change the corpus and the picks,
+# not the mix of query costs.
 _BROAD_HEADS = ("parse", "index", "token", "query", "hash", "score")
 
 _DEF = re.compile(SYMBOL_DEF_RE)
@@ -48,19 +48,19 @@ class Query:
 @dataclass
 class Inputs:
     base: list[dict]
-    batches: list[list[dict]] = field(default_factory=list)
+    batch: list[dict] = field(default_factory=list)
 
 
 def text_bytes(rows: list[dict]) -> int:
     return sum(len(r["content"].encode("utf-8")) for r in rows)
 
 
-def corpus(seed: int, base_bytes: int, batches: int = 0, batch_bytes: int = 0) -> Inputs:
-    """One ``generate_corpus`` draw cut into a base and doc-disjoint batches
+def corpus(seed: int, base_bytes: int, batch_bytes: int = 0) -> Inputs:
+    """One ``generate_corpus`` draw cut into a base and a doc-disjoint batch
     of fixed text sizes (file sizes vary tenfold, so a fixed file count
     would make the work depend on the seed). Paths carry the file index,
     so no two rows share a doc_id."""
-    want = base_bytes + batches * batch_bytes
+    want = base_bytes + batch_bytes
     rows = iter(generate_corpus(want // 1000, seed=seed))  # files average ~2 KB
 
     def take(n_bytes: int) -> list[dict]:
@@ -71,7 +71,7 @@ def corpus(seed: int, base_bytes: int, batches: int = 0, batch_bytes: int = 0) -
             size += len(r["content"].encode("utf-8"))
         return out
 
-    return Inputs(base=take(base_bytes), batches=[take(batch_bytes) for _ in range(batches)])
+    return Inputs(base=take(base_bytes), batch=take(batch_bytes) if batch_bytes else [])
 
 
 def definitions(content: str) -> list[str]:
@@ -124,10 +124,10 @@ class QueryMaker:
             (r, lits) for r in self.rows if (lits := _LITERAL.findall(r["content"]))
         ]
 
-    def _word(self, i: int) -> Query:
-        return _make("word", terms=tuple(self.rng.sample(self.vocab, 1 + 2 * (i % 2))))
+    def _word(self) -> Query:
+        return _make("word", terms=(self.rng.choice(self.vocab),))
 
-    def _phrase(self, i: int) -> Query | None:
+    def _phrase(self) -> Query | None:
         from streamworks_search_engine_spark.functions.tokenizer import tokenize
 
         row = self.rng.choice(self.rows)
@@ -141,18 +141,18 @@ class QueryMaker:
             excludes=(self.rng.choice(absent),),
         )
 
-    def _regex_sel(self, i: int) -> Query:
+    def _regex_sel(self) -> Query:
         _, lits = self.rng.choice(self.literal_rows)
         return _make("regex_sel", regexes=(self.rng.choice(lits),))
 
-    def _regex_broad(self, i: int) -> Query:
+    def _regex_broad(self) -> Query:
         a, b = self.rng.sample(_BROAD_HEADS, 2)
         return _make("regex_broad", regexes=(f"int ({a}|{b})",))
 
-    def _sym(self, i: int) -> Query:
+    def _sym(self) -> Query:
         return _make("sym", syms=(self.rng.choice(self.top_syms),))
 
-    def _mixed(self, i: int) -> Query | None:
+    def _mixed(self) -> Query | None:
         row = self.rng.choice(self.rows)
         defs = definitions(row["content"])
         doc_terms = [t for t in self.vocab if t in self.ref.terms_of(row)]
@@ -165,33 +165,29 @@ class QueryMaker:
             regexes=(self.rng.choice(pats),), syms=(self.rng.choice(defs),),
         )
 
-    def _page(self, i: int) -> Query:
-        return replace(self._word(i), cls="page", snippets=True)
+    def _page(self) -> Query:
+        return replace(self._word(), cls="page", snippets=True)
 
-    def draw(self, cls: str, i: int = 0) -> Query:
-        """The ``i``-th query of class ``cls``: one with a non-empty
-        reference page."""
+    def draw(self, cls: str) -> Query:
+        """A query of class ``cls`` with a non-empty reference page."""
         make = getattr(self, f"_{cls}")
         for _ in range(200):
-            q = make(i)
+            q = make()
             if q is not None and self.ref.page(q):
                 return q
         raise RuntimeError(f"no {cls} query with a non-empty page for this corpus")
 
 
-def serve_queries(maker: QueryMaker, per_class: int) -> list[Query]:
-    """``per_class`` distinct queries of each class, drawn in class order."""
-    return [maker.draw(c, i) for c in CLASSES for i in range(per_class)]
+def class_queries(maker: QueryMaker, classes: tuple[str, ...]) -> list[Query]:
+    """One query of each class, drawn in class order."""
+    return [maker.draw(c) for c in classes]
 
 
 def serve_stream(queries: list[Query], seed: int):
-    """Endless interleaved stream: each round holds every class once, in a
-    seeded order, taking the classes' distinct queries in turn."""
+    """Endless interleaved stream: each round runs every query once, in a
+    seeded order."""
     rng = random.Random(seed * 104729 + 3)
-    by_class = {c: [q for q in queries if q.cls == c] for c in CLASSES}
-    for rnd in itertools.count():
-        order = list(CLASSES)
+    while True:
+        order = list(queries)
         rng.shuffle(order)
-        for c in order:
-            qs = by_class[c]
-            yield qs[rnd % len(qs)]
+        yield from order

@@ -1,6 +1,6 @@
 """Deployment benchmark for the one-directory code-search engine.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. The engine is driven only through its
 public calls (``build_engine``, ``load_engine``, ``append_docs``,
@@ -33,9 +33,7 @@ WORK = ROOT / ".perfbench"
 # small because a run (set-up included) must stay near a minute on 4 cores.
 BASE_BYTES = 1_200_000  # about 600 files
 BATCH_BYTES = 100_000  # about 50 files
-BATCHES_PER_ROUND = 1
-QUERIES_PER_CLASS = 2
-SERVE_LOADS = 3
+LOADS = 3  # load_s is the median of this many load_engine calls
 BUILD = {"term_buckets": 4, "tri_buckets": 4, "sym_buckets": 2}
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -62,6 +60,7 @@ LAYER_EXTRA = {
     "trigram.route_scan_share": "ratio",
     "trigram.route_empty_share": "ratio",
     "query.rows_per_result": "ratio",
+    "query.restrict_s": "s",
     "engine.segments": "count",
     "store.index_bytes": "B",
     "store.trigram_bytes": "B",
@@ -107,9 +106,9 @@ class Run:
         self.runs_of: dict = {}  # Query -> timed runs
         self.leg = {"match_rows": 0, "page_rows": 0, "verified": 0, "bound": 0,
                     "index": 0, "scan": 0, "empty": 0}
+        self.restrict: list[float] = []  # search() less its own query.score, per query
         self.e2e: dict[str, float] = {}
         self.deployment: Path | None = None  # the one the per-layer byte counts read
-        self.segments: set[str] = set()
         self.ops: list[tuple[str, float, float]] = []  # (batch, append s, load s)
 
     def fail(self, what: str) -> None:
@@ -147,29 +146,33 @@ class Run:
             eng = load_engine(self.spark, str(path))
             return eng, time.perf_counter() - t0
 
+    def loads(self, path: Path, op: str):
+        """``LOADS`` calls of ``load_engine``; returns (engine, median seconds)."""
+        secs = []
+        for i in range(LOADS):
+            eng, s = self.load(path, op=f"{op}{i}")
+            secs.append(s)
+        return eng, statistics.median(secs)
+
     def append(self, dep: Path, batch, n_rows: int, n_before: int, op: str):
         """``append_docs`` one batch, then ``load_engine``; returns (engine,
-        append seconds, load seconds), or None when the append raised.
-        Fails the operation unless the append did real work: a segment dir
-        not returned before, and a deployment grown by exactly the batch."""
+        append seconds, load seconds). Fails the operation unless the
+        append did real work: it returned a segment dir, and the loaded
+        deployment grew by exactly the batch. An append that raises ends
+        the run: nothing after it could be measured."""
         from streamworks_search_engine_spark.engine import append_docs
         from streamworks_search_engine_spark.operators import merge
 
         self.attempted += 1
-        try:
-            with self.tracer.span("engine.append", op=op), \
-                    self.tracer.patched(merge, "append_segment", "merge.append_segment"):
-                t0 = time.perf_counter()
-                seg = append_docs(self.spark, str(dep), batch)
-                append_s = time.perf_counter() - t0
-        except Exception:  # a failing append is counted, the run goes on
-            self.fail(f"append {op}: {traceback.format_exc(limit=3)}")
-            return None
+        with self.tracer.span("engine.append", op=op), \
+                self.tracer.patched(merge, "append_segment", "merge.append_segment"):
+            t0 = time.perf_counter()
+            seg = append_docs(self.spark, str(dep), batch)
+            append_s = time.perf_counter() - t0
         eng, load_s = self.load(dep, op=op)
         grown = eng.index.n_docs - n_before
-        if seg in self.segments or not Path(seg).is_dir() or grown != n_rows:
-            self.fail(f"append {op}: segment {seg} reused or n_docs grew by {grown}")
-        self.segments.add(seg)
+        if not Path(seg).is_dir() or grown != n_rows:
+            self.fail(f"append {op}: segment {seg} missing or n_docs grew by {grown}")
         self.ops.append((op, append_s, load_s))
         return eng, append_s, load_s
 
@@ -210,28 +213,39 @@ class Run:
         from streamworks_search_engine_spark.operators.query import (
             bm25_topk, parse_query, search)
         from streamworks_search_engine_spark.operators.symbols import symbol_lookup
-        from streamworks_search_engine_spark.operators.trigram import plan_regex, regex_search
+        from streamworks_search_engine_spark.operators.trigram import (
+            plan_regex, regex_search, regex_search_lines)
 
         from reference import K
 
         t = self.tracer
         with t.span("code_search.parse"):
-            pats, syms, rest, _ = parse_code_query(q.text)
+            pats, syms, rest, first = parse_code_query(q.text)
             terms, excludes, phrases, fields = parse_query(rest, frozenset(eng.meta.columns))
         positives = terms + [w for p in phrases for w in p]
         if positives:
-            with t.span("query.score"):
+            with t.span("query.score") as score:
                 self.leg["match_rows"] += bm25_topk(eng.index, positives, k=None).count()
             self.leg["page_rows"] += len(rows)
             if phrases or excludes or fields:
-                with t.span("query.search"):
+                # search() scores the words again before it restricts, so
+                # its wall time less query.score is the restrict alone
+                with t.span("query.search") as whole:
                     search(eng.index, rest, k=K, meta=eng.meta).collect()
-        for p in pats:
+                self.restrict.append(whole["wall_s"] - score["wall_s"])
+        # with no words, code_search ranks by the first regex atom's
+        # matching lines per doc; every other atom restricts by doc
+        lines_led = not positives and (first == "regex" or not syms)
+        for i, p in enumerate(pats):
             with t.span("trigram.plan"):
                 plan = plan_regex(eng.trigram, p)
             self.leg[plan["mode"]] += 1
             with t.span("trigram.verify"):
-                n = regex_search(eng.trigram, eng.docs, p).count()
+                if i == 0 and lines_led:
+                    n = regex_search_lines(eng.trigram, eng.docs, p).groupBy("doc_id") \
+                        .count().count()
+                else:
+                    n = regex_search(eng.trigram, eng.docs, p).count()
             if plan["mode"] == "index":
                 self.leg["verified"] += n
                 self.leg["bound"] += sum(min(plan["dfs"][x] for x in a) for a in plan["alts"])
@@ -257,14 +271,18 @@ class Run:
                     self.fail(f"{q.cls} {q.text!r}: page differs from reference")
 
     def search_metrics(self) -> None:
-        """Mean latency over the workload's query mix, which holds every
-        class equally often; the classes differ up to tenfold in cost, so
-        a median would jump between classes from run to run."""
+        """Each class's median latency, averaged over classes. The classes
+        differ up to tenfold in cost, so a median over the whole mix would
+        jump between classes from run to run."""
         regex = ("regex_sel", "regex_broad", "mixed")
+        by_class: dict[str, list[float]] = {}
+        for c, s in self.lat:
+            by_class.setdefault(c, []).append(s)
+        med = {c: statistics.median(v) for c, v in by_class.items()}
         self.e2e.update(
-            search_mean_s=mean(s for _, s in self.lat),
-            word_mean_s=mean(s for c, s in self.lat if c not in regex),
-            regex_mean_s=mean(s for c, s in self.lat if c in regex),
+            search_mean_s=mean(med.values()),
+            word_mean_s=mean(s for c, s in med.items() if c not in regex),
+            regex_mean_s=mean(s for c, s in med.items() if c in regex),
         )
 
     def layer_metrics(self, run_s: float) -> dict[str, float]:
@@ -282,6 +300,7 @@ class Run:
             out[f"trigram.route_{m}_share"] = leg[m] / routed if routed else 0.0
         out["query.rows_per_result"] = (
             leg["match_rows"] / leg["page_rows"] if leg["page_rows"] else 0.0)
+        out["query.restrict_s"] = p50(self.restrict)
         dep = self.deployment
         out["engine.segments"] = float(segment_count(dep))  # 0 on serve: no appends
         for name, sub in (("index", ("index",)), ("trigram", ("trigram",)), ("sym", ("sym",)),
@@ -312,24 +331,22 @@ def segment_count(dep: Path) -> int:
 def serve(run: Run, t_start: float, scratch: Path) -> float:
     """Closed loop, one client: an interleaved stream of seven query
     classes against a deployment built during set-up."""
-    from inputs import CLASSES, QueryMaker, corpus, serve_queries, serve_stream, text_bytes
+    from inputs import CLASSES, QueryMaker, class_queries, corpus, serve_stream, text_bytes
     from reference import Reference
 
     inp = corpus(run.seed, BASE_BYTES)
     ref = Reference(inp.base)
-    queries = serve_queries(QueryMaker(inp.base, ref, run.seed), QUERIES_PER_CLASS)
+    queries = class_queries(QueryMaker(inp.base, ref, run.seed), CLASSES)
     dep = scratch / "serve"
     run.deployment = dep
     eng, build_s = run.build(inp.base, dep)
     base_b = text_bytes(inp.base)
     run.e2e["index_mb_per_s"] = base_b / 1e6 / build_s
     run.e2e["store_ratio"] = dir_bytes(dep) / base_b
-    loads = []
-    for i in range(SERVE_LOADS):
-        eng, secs = run.load(dep, op=f"load{i}")
-        loads.append(secs)
-    run.e2e["load_s"] = p50(loads)
-    for q in queries[::QUERIES_PER_CLASS]:  # warm-up: first query of each class
+    eng, run.e2e["load_s"] = run.loads(dep, op="load")
+    # a class's first run costs up to twice a warm one; with every query
+    # warmed, a run's figures do not depend on how many rounds fit
+    for q in queries:
         run.query(eng, q, op="warmup", timed=False)
     run.e2e["setup_s"] = time.perf_counter() - t_start
 
@@ -347,48 +364,43 @@ def serve(run: Run, t_start: float, scratch: Path) -> float:
 
 
 def ingest(run: Run, t_start: float, scratch: Path) -> float:
-    """Closed loop, one client: rounds that each copy the base deployment
-    fresh and append seeded doc-disjoint batches, reloading and querying
-    after every batch; rounds repeat until ``--seconds`` has passed."""
-    from inputs import INGEST_CLASSES, QueryMaker, corpus, text_bytes
-    from reference import Reference
+    """Closed loop, one client: one seeded doc-disjoint batch is appended
+    to a fresh copy of the base deployment, which is then reloaded; queries
+    (warmed on the base during set-up) over the segmented deployment
+    follow, in whole rounds, until ``--seconds`` has passed since the
+    append began."""
+    from inputs import INGEST_CLASSES, QueryMaker, class_queries, corpus, text_bytes
+    from reference import K, Reference
 
-    inp = corpus(run.seed, BASE_BYTES, BATCHES_PER_ROUND, BATCH_BYTES)
+    inp = corpus(run.seed, BASE_BYTES, BATCH_BYTES)
+    batch = inp.batch
     maker = QueryMaker(inp.base, Reference(inp.base), run.seed)
-    queries = [maker.draw(c, i) for c in INGEST_CLASSES for i in range(QUERIES_PER_CLASS)]
+    queries = class_queries(maker, INGEST_CLASSES)
     base = scratch / "base"
-    run.build(inp.base, base)
-    batch_dfs = [run.df(b) for b in inp.batches]
+    base_eng, _ = run.build(inp.base, base)
+    # warm each query's plan on the base, as serve does; its pages are
+    # checked after the append, over base plus batch
+    for q in queries:
+        base_eng.search(q.text, k=K).collect()
+    batch_df = run.df(batch)
+    dep = scratch / "appended"
+    shutil.copytree(base, dep)  # the append goes to a copy; nothing is rebuilt over it
+    run.deployment = dep
     run.e2e["setup_s"] = time.perf_counter() - t_start
 
-    live = inp.base + [r for b in inp.batches for r in b]
-    mbps, loads, ratios = [], [], []
     t0 = time.perf_counter()
-    rnd = 0
-    while rnd == 0 or time.perf_counter() - t0 < run.seconds:
-        dep = scratch / f"round{rnd}"
-        shutil.copytree(base, dep)
-        run.deployment = dep
-        n_docs = len(inp.base)
-        for b, (rows, bdf) in enumerate(zip(inp.batches, batch_dfs)):
-            done = run.append(dep, bdf, len(rows), n_docs, f"r{rnd}b{b}")
-            if done is None:
-                continue
-            eng, append_s, load_s = done
-            n_docs += len(rows)
-            mbps.append(text_bytes(rows) / 1e6 / (append_s + load_s))
-            eng, again_s = run.load(dep, op=f"r{rnd}b{b}")
-            loads += [load_s, again_s]
-            # pages are per deployment state: keep only this batch's
-            run.pages.clear()
-            run.runs_of.clear()
-            for q in queries:
-                run.query(eng, q, op=f"r{rnd}b{b}")
-        ratios.append(dir_bytes(dep) / text_bytes(live))
-        rnd += 1
+    _, append_s, first_load_s = run.append(dep, batch_df, len(batch), len(inp.base), "batch")
+    run.e2e["index_mb_per_s"] = text_bytes(batch) / 1e6 / (append_s + first_load_s)
+    # the first load after an append is slower; load_s times the reloads
+    eng, run.e2e["load_s"] = run.loads(dep, op="reload")
+    live = inp.base + batch
+    run.e2e["store_ratio"] = dir_bytes(dep) / text_bytes(live)
+    n = 0
+    while n < len(queries) or n % len(queries) or time.perf_counter() - t0 < run.seconds:
+        run.query(eng, queries[n % len(queries)], op=f"q{n}")
+        n += 1
     measured = time.perf_counter() - t0
-    run.e2e.update(index_mb_per_s=p50(mbps), load_s=p50(loads), store_ratio=p50(ratios))
-    # the last batch's pages against the reference over everything appended
+    # the pages a from-scratch build over base plus batch must serve
     run.check_pages(Reference(live), queries)
     run.search_metrics()
     return measured
@@ -419,7 +431,7 @@ def start_spark(scratch: Path):
         "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         **BUILD,
         "base_bytes": BASE_BYTES, "batch_bytes": BATCH_BYTES,
-        "batches_per_round": BATCHES_PER_ROUND, "queries_per_class": QUERIES_PER_CLASS,
+        "loads": LOADS,
     })
     return spark, settings
 

@@ -3,9 +3,10 @@
     python3 perfbench/selftest.py
 
 Checks that two generations from one seed give the same query stream and
-the same ingest batches, then runs every workload once untraced and once
+the same ingest batch, then runs every workload once untraced and once
 traced and checks that each metric BENCHMARK.json names is emitted with
-its unit, and that every page was correct. Exits non-zero on a failure.
+its unit (no end-to-end metric reading 0), and that every page was
+correct. Exits non-zero on a failure.
 """
 
 from __future__ import annotations
@@ -25,31 +26,30 @@ import run  # noqa: E402
 
 
 def check_generation(seed: int = 5) -> None:
-    from inputs import INGEST_CLASSES, QueryMaker, corpus, serve_queries, serve_stream
+    from inputs import CLASSES, INGEST_CLASSES, QueryMaker, class_queries, corpus, serve_stream
     from reference import Reference
 
     def generate():
-        inp = corpus(seed, 150_000, batches=2, batch_bytes=20_000)
+        inp = corpus(seed, 150_000, batch_bytes=20_000)
         maker = QueryMaker(inp.base, Reference(inp.base), seed)
-        queries = serve_queries(maker, 2)
+        queries = class_queries(maker, CLASSES)
         stream = list(itertools.islice(serve_stream(queries, seed), 30))
-        return inp.base, inp.batches, stream, [maker.draw(c, i) for c in INGEST_CLASSES
-                                               for i in range(run.QUERIES_PER_CLASS)]
+        return inp.base, inp.batch, stream, class_queries(maker, INGEST_CLASSES)
 
     first, second = generate(), generate()
-    for name, a, b in zip(("base", "batches", "serve stream", "ingest queries"), first, second):
+    for name, a, b in zip(("base", "batch", "serve stream", "ingest queries"), first, second):
         if a != b:
             raise AssertionError(f"{name} differs between two generations of seed {seed}")
-    ids = [r["path"] for r in first[0]] + [r["path"] for b in first[1] for r in b]
+    ids = [r["path"] for r in first[0] + first[1]]
     if len(ids) != len(set(ids)):
-        raise AssertionError("ingest batches are not doc-disjoint from the base")
+        raise AssertionError("the ingest batch is not doc-disjoint from the base")
 
 
 def check_workloads() -> None:
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     want = {0: {m["name"]: m["unit"] for m in spec["end_to_end"]},
             1: {m["name"]: m["unit"] for m in spec["per_layer"]}}
-    run.BASE_BYTES, run.BATCH_BYTES, run.QUERIES_PER_CLASS, run.SERVE_LOADS = 150_000, 20_000, 1, 1
+    run.BASE_BYTES, run.BATCH_BYTES, run.LOADS = 150_000, 20_000, 1
     for w in spec["workloads"]:
         for trace in (0, 1):
             out = io.StringIO()
@@ -62,6 +62,9 @@ def check_workloads() -> None:
             got = {k: m["unit"] for k, m in res["metrics"].items()}
             if got != want[trace]:
                 raise AssertionError(f"{w['name']} trace={trace}: metrics {got} != {want[trace]}")
+            zero = [k for k, m in res["metrics"].items() if not trace and not m["value"]]
+            if zero:
+                raise AssertionError(f"{w['name']}: end-to-end metrics read 0: {zero}")
             print(f"ok {w['name']} trace={trace}", flush=True)
 
 

@@ -5,7 +5,9 @@ found with ``statusTracker().getJobIdsForGroup`` and their stages read
 from the JVM status store (which is populated with the UI disabled).
 Counters are self counters: jobs started inside a child span belong to
 the child's group. ``wall_s`` is recorded inclusive; ``self_s``
-subtracts the child spans, which run one after another inside it.
+subtracts the child spans, which run one after another inside it, and
+the tracer's own work around each child (``trace_s``: setting job groups
+and reading its counters), which falls inside the parent's interval.
 
 Spans are kept in memory and written out with the run's result; the
 tracer also times its own bookkeeping so a traced run can report what
@@ -62,7 +64,9 @@ class Tracer:
             )
             rec.update(start=start - self._t0, end=end - self._t0, wall_s=end - start)
             rec.update(self._counters(f"perfbench-{sid}"))
-            self.own_s += time.perf_counter() - end
+            done = time.perf_counter()
+            rec["trace_s"] = (start - t_in) + (done - end)
+            self.own_s += done - end
 
     @contextlib.contextmanager
     def patched(self, module, attr: str, name: str):
@@ -110,11 +114,12 @@ class Tracer:
         return out
 
     def self_times(self) -> None:
-        """Set ``self_s`` on every span: its wall time less its children's."""
+        """Set ``self_s`` on every span: its wall time less its children's
+        wall time and the tracer's work around them."""
         child = [0.0] * len(self.spans)
         for s in self.spans:
             if s["parent"] is not None:
-                child[s["parent"]] += s["wall_s"]
+                child[s["parent"]] += s["wall_s"] + s["trace_s"]
         for s, c in zip(self.spans, child):
             s["self_s"] = s["wall_s"] - c
 

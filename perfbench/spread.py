@@ -1,7 +1,8 @@
-"""Run one workload over several seeds and print each metric's median and
-quartile spread (Q3 - Q1 as a share of the median).
+"""Run one workload untraced over several seeds, each run as long as
+BENCHMARK.json's ``run_seconds``, and print each end-to-end metric's
+median and quartile spread (Q3 - Q1 as a share of the median).
 
-    python3 perfbench/spread.py --workload serve --seeds 1-10 --seconds 12
+    python3 perfbench/spread.py --workload serve --seeds 1-10
 
 Each run's JSON line is appended to ``.perfbench/spread-<workload>.jsonl``.
 """
@@ -28,9 +29,8 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="first-last, e.g. 1-10")
-    ap.add_argument("--seconds", default="12")
-    ap.add_argument("--trace", default="0")
     args = ap.parse_args()
+    seconds = str(json.loads((ROOT / "BENCHMARK.json").read_text())["run_seconds"])
     log = ROOT / ".perfbench" / f"spread-{args.workload}.jsonl"
     log.parent.mkdir(parents=True, exist_ok=True)
     values: dict[str, list[float]] = {}
@@ -38,7 +38,7 @@ def main() -> int:
         t0 = time.perf_counter()
         proc = subprocess.run(
             [sys.executable, str(ROOT / "perfbench" / "run.py"), "--workload", args.workload,
-             "--seed", str(seed), "--seconds", args.seconds, "--trace", args.trace],
+             "--seed", str(seed), "--seconds", seconds, "--trace", "0"],
             cwd=ROOT, capture_output=True, text=True, timeout=180,
         )
         if proc.returncode != 0:
