@@ -1,6 +1,7 @@
-"""Seeded inputs: the corpus split, the serve query stream and the ingest
-batch. Everything here is pure Python and a function of the seed alone,
-so two generations with one seed are identical (selftest.py checks it).
+"""Seeded inputs: the corpus split, the queries of each class and the
+ingest batch. Everything here is pure Python and a function of the seed
+alone, so two generations with one seed are identical (selftest.py checks
+it).
 
 A query is a :class:`Query`: the string the engine receives plus the
 structured parts it was composed from, which the reference
@@ -57,9 +58,12 @@ def text_bytes(rows: list[dict]) -> int:
 
 def corpus(seed: int, base_bytes: int, batch_bytes: int = 0) -> Inputs:
     """One ``generate_corpus`` draw cut into a base and a doc-disjoint batch
-    of fixed text sizes (file sizes vary tenfold, so a fixed file count
-    would make the work depend on the seed). Paths carry the file index,
-    so no two rows share a doc_id."""
+    of exactly these text sizes (file sizes vary tenfold, so a fixed file
+    count would make the work depend on the seed). The last file of each
+    is cut short: build and append costs are mostly per Spark job, so a
+    batch that overshot by a whole file would move the per-MB figures by
+    up to a tenth. Paths carry the file index, so no two rows share a
+    doc_id."""
     want = base_bytes + batch_bytes
     rows = iter(generate_corpus(want // 1000, seed=seed))  # files average ~2 KB
 
@@ -67,8 +71,9 @@ def corpus(seed: int, base_bytes: int, batch_bytes: int = 0) -> Inputs:
         out, size = [], 0
         while size < n_bytes:
             r = next(rows)
-            out.append(r)
-            size += len(r["content"].encode("utf-8"))
+            body = r["content"].encode("utf-8")[:n_bytes - size]
+            out.append({**r, "content": body.decode("utf-8", "ignore")})
+            size += len(out[-1]["content"].encode("utf-8"))
         return out
 
     return Inputs(base=take(base_bytes), batch=take(batch_bytes) if batch_bytes else [])
@@ -132,6 +137,8 @@ class QueryMaker:
 
         row = self.rng.choice(self.rows)
         toks = tokenize(row["content"], row["lang"])
+        if len(toks) < 2:  # a file cut short by corpus()
+            return None
         i = self.rng.randrange(len(toks) - 1)
         absent = [t for t in self.vocab if t not in set(toks)]
         if not absent:
@@ -181,13 +188,3 @@ class QueryMaker:
 def class_queries(maker: QueryMaker, classes: tuple[str, ...]) -> list[Query]:
     """One query of each class, drawn in class order."""
     return [maker.draw(c) for c in classes]
-
-
-def serve_stream(queries: list[Query], seed: int):
-    """Endless interleaved stream: each round runs every query once, in a
-    seeded order."""
-    rng = random.Random(seed * 104729 + 3)
-    while True:
-        order = list(queries)
-        rng.shuffle(order)
-        yield from order

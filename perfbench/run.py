@@ -1,6 +1,6 @@
 """Deployment benchmark for the one-directory code-search engine.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 5 --trace 0
 
 Run from the root of a checkout. The engine is driven only through its
 public calls (``build_engine``, ``load_engine``, ``append_docs``,
@@ -17,10 +17,13 @@ directory describes the workloads and metrics.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -33,18 +36,23 @@ WORK = ROOT / ".perfbench"
 # small because a run (set-up included) must stay near a minute on 4 cores.
 BASE_BYTES = 1_200_000  # about 600 files
 BATCH_BYTES = 100_000  # about 50 files
-LOADS = 3  # load_s is the median of this many load_engine calls
+LOADS = 5  # serve's load_cpu_s is the least of this many load_engine calls, after one more
 BUILD = {"term_buckets": 4, "tri_buckets": 4, "sym_buckets": 2}
+TICKS_PER_S = os.sysconf("SC_CLK_TCK")
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
+# Every time reported here is CPU seconds of the whole process tree (this
+# driver, the Spark JVM and its Python workers): on a shared host, wall
+# times drift with CPU steal by a third within minutes; CPU time does not
+# count steal. Wall times are kept in the result file.
 END_TO_END = {
     "setup_s": "s",
-    "index_mb_per_s": "MB/s",
-    "load_s": "s",
+    "index_cpu_s_per_mb": "s/MB",
+    "load_cpu_s": "s",
     "store_ratio": "x",
-    "search_mean_s": "s",
-    "word_mean_s": "s",
-    "regex_mean_s": "s",
+    "search_cpu_s": "s",
+    "word_cpu_s": "s",
+    "regex_cpu_s": "s",
 }
 LAYER_SPANS = (
     "indexer.build", "trigram.build", "symbols.build", "engine.docs_copy",
@@ -68,7 +76,7 @@ LAYER_EXTRA = {
     "store.docs_bytes": "B",
     "store.appends_bytes": "B",
     "trace.overhead_share": "ratio",
-    "trace.search_mean_s": "s",
+    "trace.search_cpu_s": "s",
 }
 
 
@@ -95,13 +103,14 @@ def mean(xs) -> float:
 class Run:
     """One benchmark invocation: Spark, the tracer, counters and samples."""
 
-    def __init__(self, spark, tracer, seed: int, seconds: float):
+    def __init__(self, spark, tracer, seed: int, seconds: float, start: tuple[float, float]):
         self.spark, self.tracer, self.seed, self.seconds = spark, tracer, seed, seconds
+        self.start = start  # (wall, CPU) when the process began
+        self.setup_wall_s = 0.0
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
-        self.lat: list[tuple[str, float]] = []  # (class, seconds)
-        self.warm: list[tuple[str, float]] = []  # untimed warm-up queries
+        self.lat: list[tuple[str, float]] = []  # (class, CPU seconds)
         self.pages: dict = {}  # Query -> page
         self.runs_of: dict = {}  # Query -> timed runs
         self.leg = {"match_rows": 0, "page_rows": 0, "verified": 0, "bound": 0,
@@ -109,18 +118,34 @@ class Run:
         self.restrict: list[float] = []  # search() less its own query.score, per query
         self.e2e: dict[str, float] = {}
         self.deployment: Path | None = None  # the one the per-layer byte counts read
-        self.ops: list[tuple[str, float, float]] = []  # (batch, append s, load s)
+        self.clocks: list[tuple[str, float, float]] = []  # (call, wall s, CPU s)
 
     def fail(self, what: str) -> None:
         self.failed += 1
         self.errors.append(what)
         print(f"perfbench: FAILED {what}", file=sys.stderr)
 
+    @contextlib.contextmanager
+    def clock(self, what: str):
+        """Wall and process-tree CPU seconds of the block, logged under ``what``."""
+        c0 = tree_cpu_s()
+        t0 = time.perf_counter()
+        rec = {}
+        yield rec
+        rec["s"] = time.perf_counter() - t0
+        rec["cpu_s"] = tree_cpu_s() - c0
+        self.clocks.append((what, rec["s"], rec["cpu_s"]))
+
+    def end_setup(self) -> None:
+        wall, cpu = self.start
+        self.setup_wall_s = time.perf_counter() - wall
+        self.e2e["setup_s"] = tree_cpu_s() - cpu
+
     def df(self, rows: list[dict]):
         return self.spark.createDataFrame(rows, SCHEMA)
 
     def build(self, rows: list[dict], out: Path):
-        """``build_engine`` into a fresh ``out``; returns (engine, seconds).
+        """``build_engine`` into a fresh ``out``; returns (engine, clock).
         Traced, its internal calls into each build layer get their own span."""
         from streamworks_search_engine_spark import engine as E
 
@@ -132,31 +157,33 @@ class Run:
                 t.patched(E, "write_trigram_index", "trigram.build"), \
                 t.patched(E, "write_symbol_table", "symbols.build"), \
                 t.patched(E, "load_engine", "engine.load"):
-            t0 = time.perf_counter()
-            eng = E.build_engine(self.spark, df, str(out), **BUILD)
-            secs = time.perf_counter() - t0
-        return eng, secs
+            with self.clock("build") as c:
+                eng = E.build_engine(self.spark, df, str(out), **BUILD)
+        return eng, c
 
     def load(self, path: Path, op: str):
         from streamworks_search_engine_spark.engine import load_engine
 
         self.attempted += 1
         with self.tracer.span("engine.load", op=op):
-            t0 = time.perf_counter()
-            eng = load_engine(self.spark, str(path))
-            return eng, time.perf_counter() - t0
+            with self.clock("load") as c:
+                eng = load_engine(self.spark, str(path))
+        return eng, c
 
     def loads(self, path: Path, op: str):
-        """``LOADS`` calls of ``load_engine``; returns (engine, median seconds)."""
-        secs = []
-        for i in range(LOADS):
-            eng, s = self.load(path, op=f"{op}{i}")
-            secs.append(s)
-        return eng, statistics.median(secs)
+        """``1 + LOADS`` calls of ``load_engine``; returns (engine, fewest
+        CPU seconds of the last ``LOADS``). A load costs about a third less
+        once the JVM has compiled the load path, and keeps falling for a few
+        loads more; when that happens varies, so a median would jump."""
+        cpu = []
+        for i in range(1 + LOADS):
+            eng, c = self.load(path, op=f"{op}{i}")
+            cpu.append(c["cpu_s"])
+        return eng, min(cpu[1:])
 
     def append(self, dep: Path, batch, n_rows: int, n_before: int, op: str):
         """``append_docs`` one batch, then ``load_engine``; returns (engine,
-        append seconds, load seconds). Fails the operation unless the
+        append CPU seconds, load CPU seconds). Fails the operation unless the
         append did real work: it returned a segment dir, and the loaded
         deployment grew by exactly the batch. An append that raises ends
         the run: nothing after it could be measured."""
@@ -166,35 +193,32 @@ class Run:
         self.attempted += 1
         with self.tracer.span("engine.append", op=op), \
                 self.tracer.patched(merge, "append_segment", "merge.append_segment"):
-            t0 = time.perf_counter()
-            seg = append_docs(self.spark, str(dep), batch)
-            append_s = time.perf_counter() - t0
-        eng, load_s = self.load(dep, op=op)
+            with self.clock("append") as appended:
+                seg = append_docs(self.spark, str(dep), batch)
+        eng, loaded = self.load(dep, op=op)
         grown = eng.index.n_docs - n_before
         if not Path(seg).is_dir() or grown != n_rows:
             self.fail(f"append {op}: segment {seg} missing or n_docs grew by {grown}")
-        self.ops.append((op, append_s, load_s))
-        return eng, append_s, load_s
+        return eng, appended["cpu_s"], loaded["cpu_s"]
 
-    def query(self, eng, q, op: str, timed: bool = True) -> None:
+    def query(self, eng, q, op: str) -> None:
         """Run ``q`` once through ``CodeSearchEngine.search``; record its
-        latency and page. Traced, each leg is then re-run on its own."""
+        CPU seconds and page. Traced, each leg is then re-run on its own."""
         with self.tracer.span("client.query", op=op):
-            self._query(eng, q, timed)
+            self._query(eng, q)
 
-    def _query(self, eng, q, timed: bool) -> None:
+    def _query(self, eng, q) -> None:
         from reference import K
 
         self.attempted += 1
         try:
             with self.tracer.span("engine.search"):
-                t0 = time.perf_counter()
-                rows = eng.search(q.text, k=K, snippets=q.snippets).collect()
-                dt = time.perf_counter() - t0
+                with self.clock(q.cls) as c:
+                    rows = eng.search(q.text, k=K, snippets=q.snippets).collect()
         except Exception:  # a failing query is counted, the run goes on
             self.fail(f"{q.cls} {q.text!r}: {traceback.format_exc(limit=3)}")
             return
-        (self.lat if timed else self.warm).append((q.cls, dt))
+        self.lat.append((q.cls, c["cpu_s"]))
         page = [tuple(r) for r in rows]
         self.runs_of[q] = self.runs_of.get(q, 0) + 1
         if self.pages.setdefault(q, page) != page:
@@ -270,20 +294,21 @@ class Run:
                 for _ in range(self.runs_of[q]):
                     self.fail(f"{q.cls} {q.text!r}: page differs from reference")
 
-    def search_metrics(self) -> None:
-        """Each class's median latency, averaged over classes. The classes
-        differ up to tenfold in cost, so a median over the whole mix would
-        jump between classes from run to run."""
+    def search_metrics(self) -> dict[str, float]:
+        """Each class's median CPU seconds per query, averaged over all
+        classes, the word-led ones and the regex ones. The classes differ
+        up to tenfold in cost, so a median over the whole mix would jump
+        between classes from run to run."""
         regex = ("regex_sel", "regex_broad", "mixed")
         by_class: dict[str, list[float]] = {}
         for c, s in self.lat:
             by_class.setdefault(c, []).append(s)
         med = {c: statistics.median(v) for c, v in by_class.items()}
-        self.e2e.update(
-            search_mean_s=mean(med.values()),
-            word_mean_s=mean(s for c, s in med.items() if c not in regex),
-            regex_mean_s=mean(s for c, s in med.items() if c in regex),
-        )
+        return {
+            "search_cpu_s": mean(med.values()),
+            "word_cpu_s": mean(s for c, s in med.items() if c not in regex),
+            "regex_cpu_s": mean(s for c, s in med.items() if c in regex),
+        }
 
     def layer_metrics(self, run_s: float) -> dict[str, float]:
         t = self.tracer
@@ -307,8 +332,7 @@ class Run:
                           ("docs", ("docs",)), ("appends", ("appends", "wordseg"))):
             out[f"store.{name}_bytes"] = float(sum(dir_bytes(dep / d) for d in sub))
         out["trace.overhead_share"] = t.own_s / run_s
-        out["trace.search_mean_s"] = mean(
-            s["wall_s"] for s in t.spans if s["name"] == "engine.search" and s["op"] != "warmup")
+        out["trace.search_cpu_s"] = self.search_metrics()["search_cpu_s"]
         return out
 
 
@@ -328,10 +352,10 @@ def segment_count(dep: Path) -> int:
                for d in dep.glob(pattern) if (d / "_COMMITTED").exists())
 
 
-def serve(run: Run, t_start: float, scratch: Path) -> float:
+def serve(run: Run, scratch: Path) -> float:
     """Closed loop, one client: an interleaved stream of seven query
     classes against a deployment built during set-up."""
-    from inputs import CLASSES, QueryMaker, class_queries, corpus, serve_stream, text_bytes
+    from inputs import CLASSES, QueryMaker, class_queries, corpus, text_bytes
     from reference import Reference
 
     inp = corpus(run.seed, BASE_BYTES)
@@ -339,60 +363,59 @@ def serve(run: Run, t_start: float, scratch: Path) -> float:
     queries = class_queries(QueryMaker(inp.base, ref, run.seed), CLASSES)
     dep = scratch / "serve"
     run.deployment = dep
-    eng, build_s = run.build(inp.base, dep)
+    eng, built = run.build(inp.base, dep)
     base_b = text_bytes(inp.base)
-    run.e2e["index_mb_per_s"] = base_b / 1e6 / build_s
+    run.e2e["index_cpu_s_per_mb"] = built["cpu_s"] / (base_b / 1e6)
     run.e2e["store_ratio"] = dir_bytes(dep) / base_b
-    eng, run.e2e["load_s"] = run.loads(dep, op="load")
-    # a class's first run costs up to twice a warm one; with every query
-    # warmed, a run's figures do not depend on how many rounds fit
-    for q in queries:
-        run.query(eng, q, op="warmup", timed=False)
-    run.e2e["setup_s"] = time.perf_counter() - t_start
+    eng, run.e2e["load_cpu_s"] = run.loads(dep, op="load")
+    run.end_setup()
 
-    # whole rounds only, so every class has the same number of samples
-    stream = serve_stream(queries, run.seed)
+    # Whole rounds only, so every class has the same number of samples.
+    # No warm-up: a query's first run is timed. Its second and third runs
+    # still differ by up to a half while the JVM compiles the query path,
+    # and a round costs 8-16 s of a run that is mostly set-up; the first
+    # run is the steadiest figure a one-minute run can hold. The first
+    # query also pays for compiling what all queries share, so the rounds
+    # go in class order: that cost falls on the same class in every run.
     t0 = time.perf_counter()
     n = 0
-    while n % len(CLASSES) or time.perf_counter() - t0 < run.seconds:
-        run.query(eng, next(stream), op=f"q{n}")
+    while n % len(queries) or time.perf_counter() - t0 < run.seconds:
+        run.query(eng, queries[n % len(queries)], op=f"q{n}")
         n += 1
     measured = time.perf_counter() - t0
     run.check_pages(ref, queries)
-    run.search_metrics()
+    run.e2e.update(run.search_metrics())
     return measured
 
 
-def ingest(run: Run, t_start: float, scratch: Path) -> float:
+def ingest(run: Run, scratch: Path) -> float:
     """Closed loop, one client: one seeded doc-disjoint batch is appended
-    to a fresh copy of the base deployment, which is then reloaded; queries
-    (warmed on the base during set-up) over the segmented deployment
-    follow, in whole rounds, until ``--seconds`` has passed since the
-    append began."""
+    to a fresh copy of the base deployment, which is then loaded; queries
+    over the segmented deployment follow, in whole rounds, until
+    ``--seconds`` has passed since the append began. As on serve, a
+    query's first run is timed."""
     from inputs import INGEST_CLASSES, QueryMaker, class_queries, corpus, text_bytes
-    from reference import K, Reference
+    from reference import Reference
 
     inp = corpus(run.seed, BASE_BYTES, BATCH_BYTES)
     batch = inp.batch
     maker = QueryMaker(inp.base, Reference(inp.base), run.seed)
     queries = class_queries(maker, INGEST_CLASSES)
     base = scratch / "base"
-    base_eng, _ = run.build(inp.base, base)
-    # warm each query's plan on the base, as serve does; its pages are
-    # checked after the append, over base plus batch
-    for q in queries:
-        base_eng.search(q.text, k=K).collect()
+    run.build(inp.base, base)
     batch_df = run.df(batch)
     dep = scratch / "appended"
     shutil.copytree(base, dep)  # the append goes to a copy; nothing is rebuilt over it
     run.deployment = dep
-    run.e2e["setup_s"] = time.perf_counter() - t_start
+    run.end_setup()
 
     t0 = time.perf_counter()
-    _, append_s, first_load_s = run.append(dep, batch_df, len(batch), len(inp.base), "batch")
-    run.e2e["index_mb_per_s"] = text_bytes(batch) / 1e6 / (append_s + first_load_s)
-    # the first load after an append is slower; load_s times the reloads
-    eng, run.e2e["load_s"] = run.loads(dep, op="reload")
+    eng, append_cpu, load_cpu = run.append(dep, batch_df, len(batch), len(inp.base), "batch")
+    # CPU per MB until the batch is searchable; load_cpu_s is the least of
+    # that load and two more, which fall as the JVM compiles the load path
+    run.e2e["index_cpu_s_per_mb"] = (append_cpu + load_cpu) / (text_bytes(batch) / 1e6)
+    reloads = [run.load(dep, op=f"reload{i}")[1]["cpu_s"] for i in range(2)]
+    run.e2e["load_cpu_s"] = min(load_cpu, *reloads)
     live = inp.base + batch
     run.e2e["store_ratio"] = dir_bytes(dep) / text_bytes(live)
     n = 0
@@ -402,7 +425,7 @@ def ingest(run: Run, t_start: float, scratch: Path) -> float:
     measured = time.perf_counter() - t0
     # the pages a from-scratch build over base plus batch must serve
     run.check_pages(Reference(live), queries)
-    run.search_metrics()
+    run.e2e.update(run.search_metrics())
     return measured
 
 
@@ -436,6 +459,111 @@ def start_spark(scratch: Path):
     return spark, settings
 
 
+def adopt_orphans() -> None:
+    """Make this process the reaper of its descendants (Linux
+    ``PR_SET_CHILD_SUBREAPER``). Spark's Python daemon leaves the JVM's
+    process group and can outlive the JVM; orphaned, it and its workers
+    become children of this process, so ``end_children`` can wait for them."""
+    import ctypes
+
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def processes() -> dict[int, tuple[int, int]]:
+    """Every live pid's parent pid and CPU clock ticks (user and system,
+    its own and its reaped children's), from /proc."""
+    out = {}
+    for d in Path("/proc").iterdir():
+        if not d.name.isdigit():
+            continue
+        try:
+            f = (d / "stat").read_text().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        out[int(d.name)] = (int(f[1]), sum(map(int, f[11:15])))
+    return out
+
+
+def children() -> list[int]:
+    """Pids whose parent is this process, zombies included."""
+    me = os.getpid()
+    return [pid for pid, (ppid, _) in processes().items() if ppid == me]
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its live descendants:
+    the Spark JVM, its Python daemons and their workers."""
+    kids: dict[int, list[int]] = {}
+    procs = processes()
+    for pid, (ppid, _) in procs.items():
+        kids.setdefault(ppid, []).append(pid)
+    todo, ticks = [os.getpid()], 0
+    while todo:
+        pid = todo.pop()
+        ticks += procs.get(pid, (0, 0))[1]
+        todo += kids.get(pid, [])
+    return ticks / TICKS_PER_S
+
+
+def stop_spark(spark) -> None:
+    """Stop Spark, then end the gateway JVM (it exits when its stdin
+    closes) and wait for it. A later session in this process starts a
+    new gateway."""
+    from pyspark import SparkContext
+
+    if spark is not None:
+        spark.stop()
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    SparkContext._gateway = SparkContext._jvm = None
+    try:
+        gateway.shutdown()
+    except Exception:  # the JVM may be gone already; its exit is waited for below
+        pass
+    proc = getattr(gateway, "proc", None)
+    if proc is None:
+        return
+    if proc.stdin:
+        proc.stdin.close()
+    try:
+        proc.wait(timeout=60)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+
+
+def end_children(grace_s: float = 20.0) -> None:
+    """Return once this process has no child left: reap those that exit,
+    send TERM to any still running after ``grace_s``, KILL after twice."""
+    t0 = time.monotonic()
+    sent = None
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            pass
+        kids = children()
+        if not kids:
+            return
+        waited = time.monotonic() - t0
+        sig = signal.SIGKILL if waited > 2 * grace_s else signal.SIGTERM if waited > grace_s else None
+        if sig is not None and sig != sent:
+            for pid in kids:
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, sig)
+            sent = sig
+        time.sleep(0.05)
+
+
+def _exit_on_term(signum, frame):
+    sys.exit(128 + signum)  # unwinds through main's cleanup
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
@@ -444,6 +572,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
     t_start = time.perf_counter()
+    cpu_start = tree_cpu_s()
 
     if not (ROOT / "streamworks_search_engine_spark" / "__init__.py").is_file():
         print(f"perfbench: no engine package under {ROOT}", file=sys.stderr)
@@ -452,12 +581,16 @@ def main(argv: list[str] | None = None) -> int:
 
     from spans import Tracer, host_context
 
+    adopt_orphans()
+    signal.signal(signal.SIGTERM, _exit_on_term)
     scratch = WORK / f"run-{os.getpid()}"
     shutil.rmtree(scratch, ignore_errors=True)
-    spark, settings = start_spark(scratch)
+    spark = None
     try:
-        run = Run(spark, Tracer(spark, bool(args.trace)), args.seed, args.seconds)
-        measured = WORKLOADS[args.workload](run, t_start, scratch)
+        spark, settings = start_spark(scratch)
+        run = Run(spark, Tracer(spark, bool(args.trace)), args.seed, args.seconds,
+                  (t_start, cpu_start))
+        measured = WORKLOADS[args.workload](run, scratch)
         if args.trace:
             layers = run.layer_metrics(time.perf_counter() - t_start)
             metrics = {k: {"value": layers[k], "unit": u} for k, u in layer_metric_units().items()}
@@ -471,13 +604,17 @@ def main(argv: list[str] | None = None) -> int:
         }
         detail = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-            "trace": args.trace, "measured_s": measured, "result": result,
-            "latencies": run.lat, "warmup": run.warm, "appends": run.ops, "errors": run.errors,
+            "trace": args.trace, "setup_wall_s": run.setup_wall_s, "measured_s": measured,
+            "result": result, "clocks": run.clocks, "errors": run.errors,
             "host": host_context(spark, settings), "spans": run.tracer.spans,
         }
     finally:
-        spark.stop()
-        shutil.rmtree(scratch, ignore_errors=True)
+        # every process this run started has ended before a result is printed
+        try:
+            stop_spark(spark)
+        finally:
+            end_children()
+            shutil.rmtree(scratch, ignore_errors=True)
     out = WORK / "results"
     out.mkdir(parents=True, exist_ok=True)
     name = f"{args.workload}-seed{args.seed}-trace{args.trace}.json"
